@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Benchmark main: runs every SparkEntry query against
@@ -66,8 +65,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
+    val cpus = Sessions.cpus()
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
     // best-of-3 by default (2 -> 3 in round 10): repeated full-board
@@ -85,13 +83,7 @@ object Bench {
     if (sys.env.get("SPARK_GRAFT_MEMO_CAP").isEmpty &&
         sys.props.get("graft.memo.cap").isEmpty)
       sys.props("graft.memo.cap") = "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
 
     // running max of task peakExecutionMemory; reset per query
     val peakTask = new java.util.concurrent.atomic.AtomicLong(0L)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** BPE training-scale bench — measures [[graft.operators.Bpe.trainOn]]
@@ -31,15 +30,8 @@ object BpeBench {
   def main(args: Array[String]): Unit = {
     val ns = sys.env.getOrElse("SPARK_GRAFT_BPE_NS", "1000,4000")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus(),
+      "spark.sql.shuffle.partitions" -> "32")
     import spark.implicits._
 
     // deterministic synthetic vocabulary: the same fixture shape as the

@@ -6,10 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionIn
 import org.apache.spark.sql.types.DoubleType
 import graft.functions.{ArrayDotExpr, NormCdfExpr}
 
-/** SparkSessionExtensions entry point (SURVEY §7.3 optional surface):
-  * registers the engine's native expressions as SQL functions so
-  * `spark.sql("SELECT norm_cdf(x) ...")` works with
-  * `spark.sql.extensions=graft.GraftExtensions`.
+/** The engine's native expressions as SQL functions (`norm_cdf`,
+  * `vec_dot`; SURVEY §7.3 optional surface). Engine sessions get them
+  * from [[Sessions.local]]; an external session gets them with
+  * `spark.sql.extensions=graft.GraftExtensions` or with `register`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -25,24 +25,16 @@ object GraftExtensions {
       new ExpressionInfo(classOf[ArrayDotExpr].getName, "vec_dot"),
       (children: Seq[Expression]) => ArrayDotExpr(children(0), children(1))))
 
-  // Weak keys: the guard must not pin stopped sessions (and their whole
-  // sessionState) in memory for the life of the process.
-  private val registered = java.util.Collections.synchronizedSet(
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  /** Register on an already-built session (Verify/Bench create plain
-    * sessions; tests too). Idempotent AND once-per-session: re-running
-    * createOrReplaceTempFunction on every query spams "function replaced"
-    * warnings through a whole bench run. The check-and-register runs
-    * under the session's monitor so a concurrent first use cannot observe
-    * the guard set while registration is still in flight (the functions
-    * are registered before ANY caller returns). */
+  /** Register on an already-built session, once: a function the session
+    * already has (an earlier call, or `spark.sql.extensions`) is left as
+    * it is, so repeat calls add no "function replaced" warnings. Runs
+    * under the session's monitor, so a concurrent caller returns only
+    * after the functions are in. */
   def register(spark: SparkSession): Unit = spark.synchronized {
-    if (registered.add(spark))
-      descriptors.foreach { case (id, _, builder) =>
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          id.funcName, builder, "built-in")
-      }
+    val registry = spark.sessionState.functionRegistry
+    descriptors.foreach { case (id, _, builder) =>
+      if (!registry.functionExists(id))
+        registry.createOrReplaceTempFunction(id.funcName, builder, "built-in")
+    }
   }
 }

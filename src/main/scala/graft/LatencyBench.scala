@@ -117,23 +117,16 @@ object LatencyBench {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = Sessions.local(Sessions.cpus(),
       // latency, not throughput: every micro-batch pays one state-store
       // commit per shuffle partition per stateful operator, so FEWER
       // partitions = less fixed per-trigger overhead (4 still spreads
       // 1000 symbols 250 keys/partition — each key is O(ring) state)
-      .config("spark.sql.shuffle.partitions", "4")
+      "spark.sql.shuffle.partitions" -> "4",
       // windowed-agg finalization then rides the NEXT data batch instead
       // of a separate empty watermark-advance batch — one batch per
       // trigger, not two
-      .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
     val ticksPerSym = 20 // ticks per symbol-minute in each burst
     val shm = new java.io.File("/dev/shm")
     val shmBase = if (shm.isDirectory && shm.canWrite) "/dev/shm" else "/tmp"

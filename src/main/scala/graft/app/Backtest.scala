@@ -1,7 +1,7 @@
 package graft.app
 
 import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{Sessions, SparkEntry}
 
 /** Batch replay entry point (SURVEY §7.1): one pass over a scale-factor
   * directory producing the engine's result tables — the signal frame
@@ -29,14 +29,7 @@ object Backtest {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus(4))
     run(spark, sfDir, outDir)
     spark.stop()
   }

@@ -634,19 +634,9 @@ object Live {
     // 4-arg: trade-only; optional 5th arg: a book-update feed directory
     val Array(tradesDir, signalsDir, outDir, ckptDir) = args.take(4)
     val booksDir = args.drop(4).headOption
-    // Deployment config comes from spark-submit when present: a set
-    // `spark.master` system property wins (cluster runs), and the
-    // shuffle width is overridable the same way; the local[4]/4 pair
-    // is only the sandbox demo default, never forced on a cluster.
-    val builder = SparkSession.builder()
-      .config("spark.sql.shuffle.partitions",
-        sys.props.getOrElse("spark.sql.shuffle.partitions", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = sys.props.get("spark.master")
-      .fold(builder.master("local[4]"))(_ => builder)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // local[4] is only the sandbox demo default: spark-submit's master
+    // and shuffle width win (Sessions.settings)
+    val spark = graft.Sessions.local(4)
     val qs = Seq(
       barsQuery(spark, tradesDir, outDir, ckptDir),
       deltaQuery(spark, tradesDir, outDir, ckptDir),

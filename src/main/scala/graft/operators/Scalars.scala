@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.GraftExtensions
 import graft.functions.{ColFns, MomentsAgg}
 import graft.sources.Tables
 import graft.OpModule
@@ -22,7 +21,6 @@ import graft.OpModule
 object Scalars extends OpModule {
 
   private def normcdfDf(spark: SparkSession, dir: String): DataFrame = {
-    GraftExtensions.register(spark)
     import spark.implicits._
     Tables.events(spark, dir)
       .select($"event_id", $"value")

@@ -60,8 +60,7 @@ object Similarity extends OpModule {
   /** Native codegen kernel (ArrayDotExpr, registered as vec_dot):
     * accumulates in index order exactly like the zip_with+aggregate fold
     * it replaced, so results are bitwise identical — just without
-    * materializing a zipped array per pair. Callers register the
-    * function first (Similarity queries do). */
+    * materializing a zipped array per pair. */
   private def dot(a: Column, b: Column): Column =
     call_function("vec_dot", a, b)
 
@@ -81,7 +80,6 @@ object Similarity extends OpModule {
     * rows. */
   private def rankedPool(spark: SparkSession, dir: String): DataFrame =
     graft.functions.DfMemo.cached(spark, s"knn_pool:$dir") {
-      graft.GraftExtensions.register(spark)
       import spark.implicits._
       val e = Tables.embeddings(spark, dir)
       val q = e.filter(isQueryCol($"vec_id"))
@@ -174,7 +172,6 @@ object Similarity extends OpModule {
     * bucket, top-3 per query. The equi-join on bucket replaces the cross
     * join — the whole point of the scale path. */
   private def lshTopkDf(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     val sig = lshSigDf(spark, dir)
@@ -334,7 +331,6 @@ object Similarity extends OpModule {
 
   /** Candidates from ANY of the L tables, deduped, exact top-3. */
   private def multiTopkDf(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     val sig = multiSigDf(spark, dir)
@@ -465,10 +461,6 @@ object Similarity extends OpModule {
     * one explode + hash aggregation. */
   private def rankAgainst(spark: SparkSession, dir: String,
       comp: DataFrame): DataFrame = {
-    // register BEFORE norm() builds a vec_dot call: this frame is
-    // constructed as an argument expression, i.e. before any caller's
-    // own register() line runs
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     val cn = comp.groupBy($"cell")
@@ -503,7 +495,6 @@ object Similarity extends OpModule {
     * the common tail of every coarse-quantized ANN rung. */
   private def cellTopk(spark: SparkSession, dir: String,
       ranked: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     val assign = ranked.filter($"rk" === 1)
@@ -785,7 +776,6 @@ object Similarity extends OpModule {
     * Shared by the fixed-budget top-k tail and the recall-curve sweep. */
   private def pqApproxDf(spark: SparkSession, dir: String,
       probes: Int): DataFrame = {
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     val ranked = kmeansRankedDf(spark, dir)
@@ -841,7 +831,6 @@ object Similarity extends OpModule {
       pqApproxDf(spark, dir, MaxProbeBudget))
 
   private def pqTopkDf(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     val short = pqApproxMemo(spark, dir)
@@ -1067,7 +1056,6 @@ object Similarity extends OpModule {
     * and the width-16 rung of `ann_trunc_curve` share one build. */
   private def truncShortDf(spark: SparkSession, dir: String,
       d: Int): DataFrame = {
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     graft.functions.DfMemo.cached(spark, s"trunc_short:$d:$dir") {
       val e = Tables.embeddings(spark, dir)
@@ -1256,7 +1244,6 @@ object Similarity extends OpModule {
     * `ann_filtered_recall`. */
   private def filteredTopkDf(spark: SparkSession, dir: String): DataFrame =
     graft.functions.DfMemo.cached(spark, s"ann_filtered:$dir") {
-      graft.GraftExtensions.register(spark)
       import spark.implicits._
       val e = Tables.embeddings(spark, dir)
       val q = e.filter(isQueryCol($"vec_id"))
@@ -1298,7 +1285,6 @@ object Similarity extends OpModule {
     * above: the rank-20 boundary is where engine ulps would bite. */
   private def bruteDeepDf(spark: SparkSession, dir: String): DataFrame =
     graft.functions.DfMemo.cached(spark, s"brute_deep:$dir") {
-      graft.GraftExtensions.register(spark)
       import spark.implicits._
       val e = Tables.embeddings(spark, dir)
       val q = e.filter(isQueryCol($"vec_id"))
@@ -1469,7 +1455,6 @@ object Similarity extends OpModule {
     * documented trade every production near-dup pipeline makes). Pairs
     * are canonical (vec_a < vec_b). */
   private def embNearDupDf(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     val sig = multiSigDf(spark, dir)
@@ -1789,7 +1774,6 @@ object Similarity extends OpModule {
     * before the per-cell average so both engines aggregate identical
     * inputs. All frames involved are memoized by the ANN ladder. */
   private def pqDistortionDf(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     // the per-(vector, subspace) squared distance to the CHOSEN codeword
     // is already computed by the code assignment — the distortion is its
@@ -1865,7 +1849,6 @@ object Similarity extends OpModule {
     }
 
   private def semDedupUncached(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     val assign = kmeansRankedDf(spark, dir).filter($"rk" === 1)
@@ -2258,7 +2241,6 @@ object Similarity extends OpModule {
     * replays each greedy level as a chained CTE with NOT EXISTS
     * screening out already-picked candidates. */
   private def mmrTopkDf(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     // the memoized exact ranked frame `knn_brute` also reads: panel×M

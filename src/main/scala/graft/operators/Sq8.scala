@@ -89,7 +89,6 @@ object Sq8 extends OpModule {
     * hurt by one shared byte scale (the OPQ rung's anisotropy story,
     * measured on the SQ path). */
   private def distortionDf(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     val errs = Tables.embeddings(spark, dir)
       .crossJoin(broadcast(statsRowDf(spark, dir)))
@@ -113,7 +112,6 @@ object Sq8 extends OpModule {
     * corpus, scored like every other rung against the memoized exact
     * top-3. */
   private def recallDf(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
       .crossJoin(broadcast(statsRowDf(spark, dir)))

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.{ColFns, MomentsAgg, NormCdf}
-import graft.GraftExtensions
 
 /** The custom Catalyst surface: codegen expression vs expression tree vs
   * scalar kernel must agree bitwise; the Welford aggregator must match
@@ -11,7 +10,6 @@ class ScalarsSpec extends SparkSpec {
 
   test("norm_cdf codegen expression == expression tree == scalar kernel, bitwise") {
     import spark.implicits._
-    GraftExtensions.register(spark)
     val xs = Seq(-4.0, -1.5, -0.0001, 0.0, 0.3, 1.96, 5.5)
     val rows = xs.toDF("x")
       .withColumn("native", expr("norm_cdf(x)"))
@@ -27,7 +25,6 @@ class ScalarsSpec extends SparkSpec {
 
   test("norm_cdf expression survives whole-stage codegen and nulls") {
     import spark.implicits._
-    GraftExtensions.register(spark)
     // a real scan: local relations constant-fold before codegen
     val df = graft.sources.Tables.events(spark, sfDir())
       .selectExpr("value", "norm_cdf(value) AS p",
@@ -43,7 +40,6 @@ class ScalarsSpec extends SparkSpec {
 
   test("vec_dot equals the fold it replaced, handles nulls and short vectors") {
     import spark.implicits._
-    GraftExtensions.register(spark)
     val df = Seq(
       (1L, Seq(1f, 2f, 3f), Seq(4f, 5f, 6f)),
       (2L, Seq(0.5f, -1.5f), Seq(2f, 2f)))
